@@ -1,7 +1,7 @@
 package graft.gtfs
 
 import java.time.{LocalDateTime, ZoneId}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -32,8 +32,6 @@ object BronzeIngest {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  def insertDateLit(ts: LocalDateTime): Column = lit(ts)
-
   /** CSV read with the reference's COPY options
     * (gtfs_static_daily.py:117-142): header skipped, `"` quoting,
     * NULL_IF ('', 'NULL', 'null'), malformed rows dropped
@@ -42,13 +40,7 @@ object BronzeIngest {
     */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               glob: Option[String] = None): DataFrame = {
-    val reader = spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
-      .option("mode", "DROPMALFORMED")
+    val reader = copyReader(spark, schema).option("mode", "DROPMALFORMED")
     val withGlob = glob.fold(reader)(g => reader.option("pathGlobFilter", g))
     val df = withGlob.csv(path)
     // NULL_IF list beyond '': literal "NULL"/"null" strings → null
@@ -58,6 +50,15 @@ object BronzeIngest {
           .otherwise(col(f.name)))
     }
   }
+
+  /** The COPY options both CSV reads share: header skipped, `"` quoting, '' → null. */
+  private def copyReader(spark: SparkSession, schema: StructType) =
+    spark.read
+      .schema(schema)
+      .option("header", "true")
+      .option("quote", "\"")
+      .option("escape", "\"")
+      .option("nullValue", "")
 
   /** PERMISSIVE audit variant of readCsv (SURVEY §4: the reference's
     * ON_ERROR='CONTINUE' silently loses malformed rows): bad rows land
@@ -69,12 +70,7 @@ object BronzeIngest {
       : (DataFrame, DataFrame) = {
     val withCorrupt = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("_corrupt_record", StringType))
-    val df = spark.read
-      .schema(withCorrupt)
-      .option("header", "true")
-      .option("quote", "\"")
-      .option("escape", "\"")
-      .option("nullValue", "")
+    val df = copyReader(spark, withCorrupt)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
@@ -104,33 +100,13 @@ object BronzeIngest {
     path
   }
 
-  /** Stamp the audit column and append to a bronze parquet table
-    * (K3/D3). Partitioned by the DATE of insert_date: silver's
-    * incremental filter (P5) then reads only new partitions.
-    */
+  /** Stamp the audit column and append to a bronze table (K3/D3). */
   def appendBronze(df: DataFrame, tablePath: String, ingestTs: LocalDateTime): Unit =
-    df.withColumn(Schemas.insertDateCol, insertDateLit(ingestTs))
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
-      .write.mode("append")
-      .partitionBy("insert_day")
-      .parquet(tablePath)
+    Schemas.appendTable(df.withColumn(Schemas.insertDateCol, lit(ingestTs)), tablePath)
 
-  /** Read a bronze table back (empty-but-typed if never written).
-    * Schema-driven read (declared columns + the insert_day partition
-    * column): no inference pass, and an empty table (zero-row append
-    * leaves no data files) still reads as an empty typed DataFrame.
-    */
-  def readBronze(spark: SparkSession, tablePath: String, name: String): DataFrame = {
-    val schema = Schemas.bronze(name)
-    if (!pathExists(spark, tablePath))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val diskSchema = StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
-      spark.read.schema(diskSchema).parquet(tablePath)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-    }
-  }
+  /** Read a bronze table back (empty-but-typed if never written). */
+  def readBronze(spark: SparkSession, tablePath: String, name: String): DataFrame =
+    Schemas.readTable(spark, tablePath, Schemas.bronze(name))
 
   /** E1, the daily static load (gtfs_static_daily.py:144-206): the 4
     * GTFS text files → typed bronze tables. `srcDir` holds the
@@ -138,15 +114,10 @@ object BronzeIngest {
     */
   def loadStatic(spark: SparkSession, srcDir: String, warehouseDir: String,
                  ingestTs: LocalDateTime = parisNow()): Unit = {
-    val files = Map(
-      "routes_static" -> "routes.txt",
-      "trips_static" -> "trips.txt",
-      "stops_static" -> "stops.txt",
-      "stop_times_static" -> "stop_times.txt")
     // File-presence precondition (P7, scripts/check_gtfs_static.py:4-6)
-    val missing = files.values.filterNot(f => pathExists(spark, s"$srcDir/$f"))
+    val missing = Schemas.staticFiles.values.filterNot(f => pathExists(spark, s"$srcDir/$f"))
     require(missing.isEmpty, s"missing GTFS files: ${missing.mkString(",")}")
-    files.foreach { case (table, file) =>
+    Schemas.staticFiles.foreach { case (table, file) =>
       val df = readCsv(spark, s"$srcDir/$file", Schemas.csvSchema(Schemas.bronze(table)))
       appendBronze(df, s"$warehouseDir/bronze/$table", ingestTs)
     }

@@ -138,10 +138,8 @@ object Fixtures {
 
   def writeRtSnapshots(tuDir: String, vpDir: String, stamp: String = "20250903_1432",
                        feedTs: Long = 1756884757L): Unit = {
-    Files.createDirectories(Paths.get(tuDir))
-    Files.createDirectories(Paths.get(vpDir))
-    Files.write(Paths.get(s"$tuDir/trip_updates_$stamp.pb"), tripUpdatesSnapshot(feedTs))
-    Files.write(Paths.get(s"$vpDir/vehicle_positions_$stamp.pb"), vehiclePositionsSnapshot(feedTs))
+    Landing.write(tuDir, "trip_updates", stamp, tripUpdatesSnapshot(feedTs))
+    Landing.write(vpDir, "vehicle_positions", stamp, vehiclePositionsSnapshot(feedTs))
   }
 
   /** The long chouette-style trip_id from trips.txt/stop_times.txt. */

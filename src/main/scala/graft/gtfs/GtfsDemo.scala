@@ -30,11 +30,9 @@ object GtfsDemo {
 
     // landing artifacts (in a real deployment: StaticFetch.downloadAndExtract + feed polls)
     Fixtures.writeStaticCsvs(s"$root/static")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/rt/tu"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/rt/vp"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/rt/tu/trip_updates_20250903_0932.pb"),
+    Landing.write(s"$root/rt/tu", "trip_updates", "20250903_0932",
       Fixtures.tripUpdatesMatchingStatic(dayStart, feedTs))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/rt/vp/vehicle_positions_20250903_0932.pb"),
+    Landing.write(s"$root/rt/vp", "vehicle_positions", "20250903_0932",
       Fixtures.vehiclePositionsSnapshot(feedTs))
 
     val wh = s"$root/warehouse"
@@ -82,7 +80,7 @@ object GtfsDemo {
       stampBase = "20250903_0934")
     relayed.awaitTermination()
     val relayNames = new java.io.File(s"$root/rt/vp_relay")
-      .list().toSeq.filter(_.endsWith(".pb")).sorted
+      .list().toSeq.filter(_.endsWith(Landing.Suffix)).sorted
     val relayRows = spark.read.format("gtfsrt")
       .option("kind", "vehicle_positions").load(s"$root/rt/vp_relay").count()
     println(s"== connector relay (${relayNames.size} snapshots, $relayRows rows): " +

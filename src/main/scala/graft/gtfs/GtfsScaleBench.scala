@@ -139,7 +139,6 @@ object GtfsScaleBench {
     val nSnapshots = 500
     val tripsPerSnap = (nTrips / nSnapshots).toInt
     val (_, tSnapSynth) = t {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(rtDir))
       for (k <- 0 until nSnapshots) {
         val w = new ProtoWire.Writer
         val ts = dayStart + 21600L + k * 120L
@@ -161,8 +160,7 @@ object GtfsScaleBench {
             }
           }
         }
-        java.nio.file.Files.write(java.nio.file.Paths.get(
-          f"$rtDir/trip_updates_20250903_$k%04d.pb"), w.toBytes)
+        Landing.write(rtDir, "trip_updates", f"20250903_$k%04d", w.toBytes)
       }
     }
     // Round-12 directive #7: the relay runs THROTTLED (25 snapshots

@@ -59,15 +59,25 @@ object ProtoWire {
     def readFloat(): Float = java.lang.Float.intBitsToFloat(readFixed32())
     def readDouble(): Double = java.lang.Double.longBitsToDouble(readFixed64())
 
+    /** Length prefix of a length-delimited field, checked against this
+      * message's end: a declared length past it would read the
+      * sibling's bytes as this field's value.
+      */
+    private def readLen(): Int = {
+      val len = readVarint()
+      if (len < 0 || len > end - pos) throw new IllegalArgumentException("truncated length-delimited field")
+      len.toInt
+    }
+
     /** Sub-reader over a length-delimited field. */
     def readMessage(): Reader = {
-      val len = readVarint().toInt
+      val len = readLen()
       val r = new Reader(buf, pos, pos + len)
       pos += len; r
     }
 
     def readString(): String = {
-      val len = readVarint().toInt
+      val len = readLen()
       val s = new String(buf, pos, len, java.nio.charset.StandardCharsets.UTF_8)
       pos += len; s
     }
@@ -76,10 +86,9 @@ object ProtoWire {
       case WireVarint => readVarint()
       case WireFixed64 => pos += 8
       case WireLen =>
-        // readVarint() advances pos, so the length must be read into a
-        // val first — `pos += readVarint()` would capture the stale pos.
-        val len = readVarint().toInt
-        if (len < 0 || pos + len > end) throw new IllegalArgumentException("truncated length-delimited field")
+        // readLen() advances pos, so the length must be read into a
+        // val first — `pos += readLen()` would capture the stale pos.
+        val len = readLen()
         pos += len
       case WireFixed32 => pos += 4
       case g => throw new IllegalArgumentException(s"unsupported wire type $g")

@@ -70,7 +70,7 @@ object RtDecode {
     * and parallelizes by file — the idiomatic "stage" scan (S6 is
     * obsolete, SURVEY §2.1).
     */
-  def readFeedFiles(spark: SparkSession, dir: String, glob: String = "*.pb"): DataFrame =
+  def readFeedFiles(spark: SparkSession, dir: String, glob: String = Landing.Glob): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
@@ -81,6 +81,12 @@ object RtDecode {
     * None instead of killing the job — the protobuf analog of the
     * CSV path's ON_ERROR='CONTINUE'. At 100 TB of polled snapshots,
     * some WILL be half-written; one bad file must not fail the batch.
+    *
+    * A snapshot cut exactly at an entity boundary is a valid, shorter
+    * feed — protobuf has no top-level end marker — so it parses to the
+    * complete feed's first entities and lands. Any other cut fails
+    * (every length-delimited field is checked against its enclosing
+    * message) and yields None.
     */
   def parseFeedSafe(bytes: Array[Byte]): Option[RtFeedMessage] =
     try Some(GtfsRtProto.parseFeed(bytes))
@@ -118,7 +124,7 @@ object RtDecode {
   /** Full bronze decode of a snapshot directory: returns the three
     * bronze DataFrames (without insert_date — BronzeIngest stamps it).
     */
-  def decodeDir(spark: SparkSession, dir: String, glob: String = "*.pb")
+  def decodeDir(spark: SparkSession, dir: String, glob: String = Landing.Glob)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val blobs = readFeedFiles(spark, dir, glob).select("content").as[Array[Byte]]
@@ -127,15 +133,14 @@ object RtDecode {
     (tu.toDF(), stu.toDF(), vp.toDF())
   }
 
-  /** T4 snapshot semantics, explicit: the minute stamp each snapshot
-    * file carries in its name (`…_yyyyMMdd_HHmm.pb`,
-    * gtfs_rt_minutely.py:29-31,111-113) parsed to a timestamp column —
-    * so windowed analytics can group by snapshot rather than by
-    * ingest batch.
+  /** T4 snapshot semantics, explicit: the `Landing` minute stamp each
+    * snapshot file carries in its name (gtfs_rt_minutely.py:29-31,
+    * 111-113) parsed to a timestamp column — so windowed analytics can
+    * group by snapshot rather than by ingest batch.
     */
   def snapshotTs(pathCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     to_timestamp(
-      regexp_extract(pathCol, "(\\d{8}_\\d{4})", 1), "yyyyMMdd_HHmm")
+      regexp_extract(pathCol, Landing.StampRe.regex, 1), Landing.StampPattern)
 
   /** K2/F9 debug dump: decoded feed entities rendered one per text
     * line (the reference's `str(ent.trip_update)` export,
@@ -143,7 +148,7 @@ object RtDecode {
     * Distributed map → text sink; debug artifact only.
     */
   def dumpFeedText(spark: SparkSession, dir: String, outDir: String,
-                   glob: String = "*.pb"): Unit = {
+                   glob: String = Landing.Glob): Unit = {
     import spark.implicits._
     readFeedFiles(spark, dir, glob).select("content").as[Array[Byte]]
       .flatMap(b => parseFeedSafe(b).toSeq.flatMap(_.entities.map(_.toString)))

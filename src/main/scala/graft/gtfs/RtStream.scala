@@ -1,9 +1,8 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DateType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming assembly of the RT pipeline (SURVEY.md §2.10,
   * §7.1 step 6): the engine-native replacement for the reference's
@@ -53,59 +52,52 @@ object RtStream {
     }
   }
 
-  /** Stream the TripUpdates feed snapshots: one binary blob per file →
-    * decoded trip headers + exploded stop-time rows, appended to
-    * bronze with the per-batch ingest stamp.
+  /** Stream a landing dir's snapshots, one binary blob per file, into
+    * `ingest` per micro-batch — marker-guarded under `table` so a
+    * replayed batch never double-appends.
     */
-  def startTripUpdatesIngest(spark: SparkSession, landingDir: String,
-                             warehouseDir: String, checkpointDir: String,
-                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+  private def startIngest(spark: SparkSession, landingDir: String, checkpointDir: String,
+                          trigger: Trigger, table: String)
+                         (ingest: Dataset[Array[Byte]] => Unit): StreamingQuery = {
     import spark.implicits._
     spark.readStream.format("binaryFile")
       .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.pb")
+      .option("pathGlobFilter", Landing.Glob)
       .load(landingDir)
       .select("content")
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Single-parse path: persists the decoded pairs across the two
-        // bronze writes (no double decode, no double source read).
-        // Marker-guarded so a replayed batch never double-appends.
-        onceperBatch(spark, checkpointDir, "trip_updates", batchId) {
-          BronzeIngest.ingestTripUpdateBlobs(
-            batch.select("content").as[Array[Byte]], warehouseDir, BronzeIngest.parisNow())
-          ()
+        onceperBatch(spark, checkpointDir, table, batchId) {
+          ingest(batch.select("content").as[Array[Byte]])
         }
         ()
       }
       .start()
   }
 
+  /** Stream the TripUpdates feed snapshots: decoded trip headers +
+    * exploded stop-time rows, appended to bronze with the per-batch
+    * ingest stamp. Single-parse path: the decoded pairs persist across
+    * the two bronze writes (no double decode, no double source read).
+    */
+  def startTripUpdatesIngest(spark: SparkSession, landingDir: String,
+                             warehouseDir: String, checkpointDir: String,
+                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startIngest(spark, landingDir, checkpointDir, trigger, "trip_updates") { blobs =>
+      BronzeIngest.ingestTripUpdateBlobs(blobs, warehouseDir, BronzeIngest.parisNow())
+    }
+
   /** Stream the VehiclePositions feed snapshots. */
   def startVehiclePositionsIngest(spark: SparkSession, landingDir: String,
                                   warehouseDir: String, checkpointDir: String,
-                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
-      .option("pathGlobFilter", "*.pb")
-      .load(landingDir)
-      .select("content")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onceperBatch(spark, checkpointDir, "vehicle_positions", batchId) {
-          val vp = RtDecode.decodeVehicleBlobs(batch.select("content").as[Array[Byte]])
-          BronzeIngest.appendBronze(vp.toDF(), s"$warehouseDir/bronze/vehicle_positions_raw",
-            BronzeIngest.parisNow())
-        }
-        ()
-      }
-      .start()
-  }
+                                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startIngest(spark, landingDir, checkpointDir, trigger, "vehicle_positions") { blobs =>
+      import spark.implicits._
+      BronzeIngest.appendBronze(RtDecode.decodeVehicleBlobs(blobs).toDF(),
+        s"$warehouseDir/bronze/vehicle_positions_raw", BronzeIngest.parisNow())
+    }
 
   /** Bronze→silver as a native streaming query: the parquet bronze
     * table is the streaming source, the silver projection runs per
@@ -116,19 +108,17 @@ object RtStream {
                         checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val (bronzeName, fn) = SilverTransforms.transforms(silverName)
-    val schema = StructType(Schemas.bronze(bronzeName).fields :+
-      org.apache.spark.sql.types.StructField("insert_day", DateType))
     spark.readStream
-      .schema(schema)
+      .schema(Schemas.onDisk(Schemas.bronze(bronzeName)))
       .parquet(s"$warehouseDir/bronze/$bronzeName")
-      .drop("insert_day")
+      .drop(Schemas.insertDayCol)
       .transform(fn)
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
+      .transform(Schemas.withInsertDay)
       .writeStream
       .format("parquet")
       .option("path", s"$warehouseDir/silver/$silverName")
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("insert_day")
+      .partitionBy(Schemas.insertDayCol)
       .outputMode("append")
       .trigger(trigger)
       .start()

@@ -1,5 +1,7 @@
 package graft.gtfs
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, to_date}
 import org.apache.spark.sql.types._
 
 /** Declared-once schemas for every bronze/silver table of the engine —
@@ -12,10 +14,38 @@ import org.apache.spark.sql.types._
   * `insert_date` (Paris wall-clock TIMESTAMP_NTZ) is appended to every
   * table at write time (DDL DEFAULT in the reference,
   * dags/gtfs_static_daily.py:58).
+  *
+  * The on-disk layout lives here too: every table is append-only
+  * parquet partitioned by [[insertDayCol]], the DATE of insert_date,
+  * so silver's incremental filter (P5) reads only new partitions.
   */
 object Schemas {
 
   val insertDateCol = "insert_date"
+  val insertDayCol = "insert_day"
+
+  /** A table's on-disk schema: declared columns + the partition column. */
+  def onDisk(t: StructType): StructType =
+    StructType(t.fields :+ StructField(insertDayCol, DateType))
+
+  /** Derive the partition column from insert_date. */
+  def withInsertDay(df: DataFrame): DataFrame =
+    df.withColumn(insertDayCol, to_date(col(insertDateCol)))
+
+  /** Append `df` (insert_date already stamped) to the table at `path`. */
+  def appendTable(df: DataFrame, path: String): Unit =
+    withInsertDay(df).write.mode("append").partitionBy(insertDayCol).parquet(path)
+
+  /** Read the table at `path` with its declared `schema` — no inference
+    * pass, which is required on an empty table (a zero-row append
+    * leaves a dir with no data files, where inference fails) and the
+    * right call at scale anyway. Empty-but-typed if never written.
+    */
+  def readTable(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    if (!BronzeIngest.pathExists(spark, path))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(onDisk(schema)).parquet(path)
+      .select(schema.fieldNames.map(col).toSeq: _*)
 
   private def withInsertDate(fields: StructField*): StructType =
     StructType(fields :+ StructField(insertDateCol, TimestampNTZType))
@@ -102,6 +132,13 @@ object Schemas {
   val vehiclePositionsSilver: StructType = withInsertDate(
     s("trip_id"), s("route_id"), s("vehicle_id"), d("latitude"),
     d("longitude"), l("bearing"), s("stop_id"), l("timestamp_epoch"))
+
+  /** Static bronze table → the GTFS file it loads (gtfs_static_daily.py:144-206). */
+  val staticFiles: Map[String, String] = Map(
+    "routes_static" -> "routes.txt",
+    "trips_static" -> "trips.txt",
+    "stops_static" -> "stops.txt",
+    "stop_times_static" -> "stop_times.txt")
 
   /** Catalog: bronze name → schema. */
   val bronze: Map[String, StructType] = Map(

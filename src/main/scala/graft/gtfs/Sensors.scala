@@ -33,8 +33,8 @@ object Sensors {
     */
   def waitForStaticBronze(spark: SparkSession, warehouseDir: String,
                           pokeIntervalMs: Long = 60000L, timeoutMs: Long = 3600000L): Boolean =
-    Seq("routes_static", "trips_static", "stops_static", "stop_times_static")
-      .forall(t => waitForPath(spark, s"$warehouseDir/bronze/$t", pokeIntervalMs, timeoutMs))
+    Schemas.staticFiles.keys.forall(t =>
+      waitForPath(spark, s"$warehouseDir/bronze/$t", pokeIntervalMs, timeoutMs))
 
   /** S8/A3/P7 — the check_gtfs_static.py equivalent
     * (scripts/check_gtfs_static.py:4-20): require the four GTFS files,
@@ -42,17 +42,15 @@ object Sensors {
     * column lands StringType, the `dtype=str` parity), and report
     * (file, n_rows, n_cols) shapes.
     */
-  def checkGtfsStatic(spark: SparkSession, staticDir: String): Seq[(String, Long, Int)] = {
-    val required = Seq("routes.txt", "trips.txt", "stops.txt", "stop_times.txt")
-    required.map { f =>
+  def checkGtfsStatic(spark: SparkSession, staticDir: String): Seq[(String, Long, Int)] =
+    Schemas.staticFiles.values.toSeq.map { f =>
       val p = s"$staticDir/$f"
       require(BronzeIngest.pathExists(spark, p), s"missing required GTFS file: $p")
-      val df = spark.read.option("header", "true").csv(p)
+      val df = BronzeIngest.readCsvAllString(spark, p)
       require(df.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.StringType), s"$f: all-string read expected")
       (f, df.count(), df.columns.length)
     }
-  }
 
   /** `LIST @stage` equivalent: file metadata of a landing dir. Reads
     * only the binaryFile source's metadata columns — column pruning

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StringType
   * serves the batch path and the per-micro-batch streaming path.
   *
   * Scale design: each transform is projection/derivation only (no
-  * shuffle); the watermark filter prunes on the insert_day partition
-  * column + parquet min/max row-group stats on insert_date.
+  * shuffle); the watermark filter prunes on the partition column
+  * + parquet min/max row-group stats on insert_date.
   */
 object SilverTransforms {
 
@@ -24,24 +24,20 @@ object SilverTransforms {
 
   // ---- the 7 projections (column lists from gtfs_silver.py) ----
 
+  /** The pure projections: the silver table's declared columns, as-is. */
+  private def project(silverName: String)(bronze: DataFrame): DataFrame =
+    bronze.select(Schemas.silver(silverName).fieldNames.map(col).toSeq: _*)
+
   /** routes: 8→4 data columns (gtfs_silver.py:127-131). */
-  def routes(bronze: DataFrame): DataFrame =
-    bronze.select(col("route_id"), col("agency_id"), col("route_long_name"),
-      col("route_type"), col(Schemas.insertDateCol))
+  def routes(bronze: DataFrame): DataFrame = project("routes_static_silver")(bronze)
 
   /** trips: drops trip_short_name (gtfs_silver.py:138-146). */
-  def trips(bronze: DataFrame): DataFrame =
-    bronze.select(col("route_id"), col("service_id"), col("trip_id"),
-      col("trip_headsign"), col("direction_id"), col("shape_id"),
-      col("wheelchair_accessible"), col("bike_allowed"), col(Schemas.insertDateCol))
+  def trips(bronze: DataFrame): DataFrame = project("trips_static_silver")(bronze)
 
   /** stops: drops zone_id, location_type, stop_timezone
     * (gtfs_silver.py:153-160).
     */
-  def stops(bronze: DataFrame): DataFrame =
-    bronze.select(col("stop_id"), col("stop_code"), col("stop_name"),
-      col("stop_lat"), col("stop_lon"), col("parent_station"),
-      col("wheelchair_boarding"), col(Schemas.insertDateCol))
+  def stops(bronze: DataFrame): DataFrame = project("stops_static_silver")(bronze)
 
   /** stop_times: COALESCE(arrival, departure) AS intermediate_stop
     * (P2, gtfs_silver.py:165-175).
@@ -68,10 +64,7 @@ object SilverTransforms {
       col(Schemas.insertDateCol))
 
   /** vehicle_positions: identity passthrough (P4, gtfs_silver.py:200-213). */
-  def vehiclePositions(bronze: DataFrame): DataFrame =
-    bronze.select(col("trip_id"), col("route_id"), col("vehicle_id"),
-      col("latitude"), col("longitude"), col("bearing"), col("stop_id"),
-      col("timestamp_epoch"), col(Schemas.insertDateCol))
+  def vehiclePositions(bronze: DataFrame): DataFrame = project("vehicle_positions_silver")(bronze)
 
   val transforms: Map[String, (String, DataFrame => DataFrame)] = Map(
     "routes_static_silver" -> ("routes_static", routes),
@@ -84,20 +77,10 @@ object SilverTransforms {
 
   // ---- incremental runner ----
 
-  /** Silver on-disk schema: declared columns + the insert_day
-    * partition column. Passed to every silver read so nothing ever
-    * infers — required for correctness on an empty table (a zero-row
-    * append leaves a dir with no data files, where inference fails)
-    * and the right call at scale anyway (no schema-discovery pass).
-    */
-  private def silverDiskSchema(name: String) =
-    org.apache.spark.sql.types.StructType(Schemas.silver(name).fields :+
-      org.apache.spark.sql.types.StructField("insert_day", org.apache.spark.sql.types.DateType))
-
   /** MAX(insert_date) of an existing silver table, or None when cold
     * (A1 — the only value that ever reaches the driver).
     *
-    * Partition-pruned: insert_day is the partition column and ISO
+    * Partition-pruned: `Schemas.insertDayCol` partitions it and ISO
     * dates order lexicographically, so the maximum insert_date lives
     * in the last partition directory — one FS listing plus a
     * single-partition scan, O(one day) instead of O(full history) on
@@ -108,7 +91,7 @@ object SilverTransforms {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return None
     val dayDirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => n.startsWith("insert_day=") && !n.endsWith("__HIVE_DEFAULT_PARTITION__"))
+      .filter(n => n.startsWith(s"${Schemas.insertDayCol}=") && !n.endsWith("__HIVE_DEFAULT_PARTITION__"))
     if (dayDirs.isEmpty) return None
     val lastDay = dayDirs.max // ISO yyyy-MM-dd sorts chronologically
     spark.read.schema(Schemas.silver(silverName)).parquet(s"$silverPath/$lastDay")
@@ -138,9 +121,7 @@ object SilverTransforms {
     val wm = watermark(spark, silverPath, silverName)
     val fresh = fn(incrementalFilter(bronze, wm))
     val obs = org.apache.spark.sql.Observation()
-    val out = fresh.observe(obs, count(lit(1)).as("appended"))
-      .withColumn("insert_day", to_date(col(Schemas.insertDateCol)))
-    out.write.mode("append").partitionBy("insert_day").parquet(silverPath)
+    Schemas.appendTable(fresh.observe(obs, count(lit(1)).as("appended")), silverPath)
     obs.get("appended").asInstanceOf[Long]
   }
 
@@ -154,12 +135,6 @@ object SilverTransforms {
     }.toMap
 
   /** Read a silver table back (empty-but-typed when absent). */
-  def readSilver(spark: SparkSession, warehouseDir: String, name: String): DataFrame = {
-    val path = s"$warehouseDir/silver/$name"
-    val schema = Schemas.silver(name)
-    if (!BronzeIngest.pathExists(spark, path))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(silverDiskSchema(name)).parquet(path)
-      .select(schema.fieldNames.map(col).toSeq: _*)
-  }
+  def readSilver(spark: SparkSession, warehouseDir: String, name: String): DataFrame =
+    Schemas.readTable(spark, s"$warehouseDir/silver/$name", Schemas.silver(name))
 }

@@ -63,15 +63,15 @@ object StaticFetch {
     extractZip(zipPath, dir)
   }
 
-  /** Minute-stamped snapshot filename (F10 —
-    * gtfs_rt_minutely.py:29-31): Paris wall-clock `yyyyMMdd_HHmm`.
+  /** Minute-stamped snapshot filename stamp (F10 —
+    * gtfs_rt_minutely.py:29-31), as `Landing` writes it.
     */
   def minuteStamp(ts: java.time.LocalDateTime = BronzeIngest.parisNow()): String =
-    ts.format(java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmm"))
+    Landing.stamp(ts)
 
   /** S3's fetch half (gtfs_rt_minutely.py:40-41,58-59 with the 20 s
     * feed timeout): GET a GTFS-RT protobuf feed and land it as a
-    * minute-stamped `<prefix>_yyyyMMdd_HHmm.pb` snapshot file for the
+    * minute-stamped `Landing.fileName` snapshot file for the
     * streaming ingest (RtStream) to pick up. Returns the landed path.
     * Driver-side by design — one ~100 KB blob per poll; the
     * distributed work starts at the binaryFile stream over landingDir.
@@ -79,10 +79,6 @@ object StaticFetch {
   def fetchRtSnapshot(url: String, landingDir: String, prefix: String,
                       ts: java.time.LocalDateTime = BronzeIngest.parisNow(),
                       timeoutSeconds: Long = 20L): Path = {
-    val dir = Paths.get(landingDir)
-    Files.createDirectories(dir)
-    val target = dir.resolve(s"${prefix}_${minuteStamp(ts)}.pb")
-    Files.write(target, fetchUrl(url, timeoutSeconds))
-    target
+    Landing.write(landingDir, prefix, minuteStamp(ts), fetchUrl(url, timeoutSeconds))
   }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** D1/D2 catalog-native: idempotent namespace + table registration so
   * the parquet warehouse is SQL-addressable the way the reference's
   * Snowflake schemas are (`GTFS_DB.BRONZE.routes_static` ↔
-  * `bronze.routes_static`). Tables are EXTERNAL (LOCATION) and
-  * partitioned by insert_day, so `WHERE insert_day = …` prunes
-  * partitions from SQL exactly as the DataFrame path does.
+  * `bronze.routes_static`). Tables are EXTERNAL (LOCATION) with the
+  * `Schemas` on-disk layout, so a predicate on the partition column
+  * prunes partitions from SQL exactly as the DataFrame path does.
   */
 object Warehouse {
 
@@ -17,10 +17,9 @@ object Warehouse {
     for ((name, schema) <- tables) {
       val path = s"$warehouseDir/$layer/$name"
       if (BronzeIngest.pathExists(spark, path)) {
-        val cols = schema.toDDL + ", insert_day DATE"
         spark.sql(
-          s"""CREATE TABLE IF NOT EXISTS $db.$name ($cols)
-             |USING parquet PARTITIONED BY (insert_day)
+          s"""CREATE TABLE IF NOT EXISTS $db.$name (${Schemas.onDisk(schema).toDDL})
+             |USING parquet PARTITIONED BY (${Schemas.insertDayCol})
              |LOCATION '$path'""".stripMargin)
         // pick up partitions written outside the catalog (append jobs)
         spark.sql(s"MSCK REPAIR TABLE $db.$name")

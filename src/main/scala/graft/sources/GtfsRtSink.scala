@@ -9,17 +9,22 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.gtfs.Landing
 import graft.gtfs.ProtoWire.Writer
 
 /** Write half of the gtfsrt connector: a landing-dir snapshot sink —
   * `df.write.format("gtfsrt").option("kind", …).option("stamp",
-  * "yyyyMMdd_HHmm").mode("append").save(dir)` — closing the connector
-  * loop (the reference's poller WRITES minute-stamped snapshot files
-  * the downstream DAG reads; gtfs_rt_minutely.py:166-176).
+  * …).mode("append").save(dir)` — closing the connector loop (the
+  * reference's poller WRITES minute-stamped snapshot files the
+  * downstream DAG reads; gtfs_rt_minutely.py:166-176). Options: `kind`,
+  * `stamp` (batch; default: now), `stampBase` (streaming; default:
+  * `stamp`, else now), `feedTs` (feed header time; default: the
+  * newest vehicle timestamp). File names, stamps and the listing are
+  * the landing-dir contract owned by `graft.gtfs.Landing`.
   *
   * Contract (what the read side's offset watermark relies on):
-  *  - every commit lands files named `<kind>_<stamp>[_pNN].pb` whose
-  *    basenames sort STRICTLY AFTER everything already in the dir —
+  *  - every commit lands `Landing.fileName` files whose basenames
+  *    sort STRICTLY AFTER everything already in the dir —
   *    commit REFUSES a stamp ≤ the current maximum (the
   *    monotonic-stamp contract; an out-of-order landing would be
   *    silently skipped by any stream already past that watermark);
@@ -38,103 +43,79 @@ import graft.gtfs.ProtoWire.Writer
   * (the decoder requires the trip header) — such rows are dropped,
   * matching the decode-side HasField gate.
   */
-private[sources] class GtfsRtWriteBuilder(kind: String, path: String,
-                                          info: LogicalWriteInfo)
-    extends WriteBuilder {
-  override def build(): Write = new GtfsRtWrite(kind, path, info.schema(), info.options())
-}
-
 private[sources] class GtfsRtWrite(kind: String, path: String,
                                    schema: StructType,
                                    options: CaseInsensitiveStringMap)
     extends Write {
   private def feedTs = Option(options.get("feedTs")).map(_.toLong).getOrElse(0L)
 
-  override def toBatch: BatchWrite = {
-    val stamp = Option(options.get("stamp")).getOrElse {
-      // production default: now in the writer zone (the reference
-      // stamps snapshots with the poll minute); tests pass `stamp`
-      val zone = options.getOrDefault("fileStampZone", "Europe/Paris")
-      java.time.LocalDateTime.now(java.time.ZoneId.of(zone))
-        .format(GtfsRtScan.StampFmt)
-    }
-    require(stamp.matches("""\d{8}_\d{4}"""),
-      s"gtfsrt: stamp '$stamp' must be yyyyMMdd_HHmm")
-    new GtfsRtBatchWrite(kind, path, schema, stamp, feedTs)
-  }
-
-  /** Streaming form: each epoch lands one snapshot set stamped
-    * `stampBase + epochId × stampStepMinutes` (step defaults to 2 —
-    * the reference's poll cadence, gtfs_rt_minutely.py:262), so a
-    * continuous query emits exactly the minute-stamped landing-dir
-    * layout the read side consumes. Epoch retries are idempotent: a
-    * commit that finds its own stamp already landed treats the
-    * previous attempt as the winner and discards its temps (restart
-    * recovery re-runs the last epoch; refusing it would wedge the
-    * query, double-landing would duplicate rows downstream).
+  /** Option `key` as a stamp; absent, `fallback` — by default the poll
+    * minute now, as the reference stamps its snapshots.
     */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    val base = Option(options.get("stampBase"))
-      .orElse(Option(options.get("stamp"))).getOrElse {
-        val zone = options.getOrDefault("fileStampZone", "Europe/Paris")
-        java.time.LocalDateTime.now(java.time.ZoneId.of(zone))
-          .format(GtfsRtScan.StampFmt)
-      }
-    require(base.matches("""\d{8}_\d{4}"""),
-      s"gtfsrt: stampBase '$base' must be yyyyMMdd_HHmm")
-    val step = Option(options.get("stampStepMinutes")).map(_.toLong).getOrElse(2L)
-    new GtfsRtStreamingWrite(kind, path, schema, base, step, feedTs)
-  }
+  private def stampOption(key: String, fallback: => String = Landing.stampNow()): String =
+    Landing.requireStamp(key, Option(options.get(key)).getOrElse(fallback))
+
+  override def toBatch: BatchWrite =
+    new GtfsRtBatchWrite(kind, path, schema, stampOption("stamp"), feedTs)
+
+  /** Streaming form: epoch n lands one snapshot set stamped
+    * `Landing.stepStamp(stampBase, n)` — the reference's poll cadence
+    * (gtfs_rt_minutely.py:262) — so a continuous query emits exactly
+    * the minute-stamped landing-dir layout the read side consumes.
+    * Epoch retries are idempotent: a commit that finds its own stamp
+    * already landed treats the previous attempt as the winner and
+    * discards its temps (restart recovery re-runs the last epoch;
+    * refusing it would wedge the query, double-landing would
+    * duplicate rows downstream).
+    */
+  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+    new GtfsRtStreamingWrite(kind, path, schema, stampOption("stampBase", stampOption("stamp")), feedTs)
 }
 
 private[sources] class GtfsRtStreamingWrite(kind: String, path: String,
                                             schema: StructType,
-                                            stampBase: String, stepMinutes: Long,
-                                            feedTs: Long)
+                                            stampBase: String, feedTs: Long)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  private def stampFor(epochId: Long): String =
-    java.time.LocalDateTime.parse(stampBase, GtfsRtScan.StampFmt)
-      .plusMinutes(epochId * stepMinutes).format(GtfsRtScan.StampFmt)
+  private def batchFor(epochId: Long) =
+    new GtfsRtBatchWrite(kind, path, schema, Landing.stepStamp(stampBase, epochId), feedTs)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GtfsRtStreamingWriterFactory(kind, path, schema, feedTs)
+    GtfsRtWriterFactory(kind, path, schema, feedTs)
 
+  /** One listing serves both the epoch-retry check and the
+    * monotonic-stamp check.
+    */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val stamp = stampFor(epochId)
-    val fs = new Path(path).getFileSystem(new Configuration())
-    val dup = {
-      // epoch retry: the stamp this epoch owns is already landed
-      val it = fs.listFiles(new Path(path), true)
-      var found = false
-      while (it.hasNext && !found) {
-        val st = it.next()
-        found = st.isFile && st.getPath.getName.startsWith(s"${kind}_$stamp") &&
-          st.getPath.getName.endsWith(".pb")
-      }
-      found
-    }
-    if (dup) new GtfsRtBatchWrite(kind, path, schema, stamp, feedTs).abort(messages)
-    else new GtfsRtBatchWrite(kind, path, schema, stamp, feedTs).commit(messages)
+    val write = batchFor(epochId)
+    val landed = Landing.list(path)
+    // epoch retry: the stamp this epoch owns is already landed
+    if (landed.exists(_.name.startsWith(s"${kind}_${write.stamp}"))) write.abort(messages)
+    else write.land(messages, landed)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    new GtfsRtBatchWrite(kind, path, schema, stampFor(epochId), feedTs).abort(messages)
+    batchFor(epochId).abort(messages)
 }
 
 private[sources] case class GtfsRtCommitMessage(tmpPath: String, rows: Long)
     extends WriterCommitMessage
 
 private[sources] class GtfsRtBatchWrite(kind: String, path: String,
-                                        schema: StructType, stamp: String,
+                                        schema: StructType, val stamp: String,
                                         feedTs: Long)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GtfsRtWriterFactory(kind, path, schema, feedTs)
+    GtfsRtWriterFactory(kind, path, schema, feedTs)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    land(messages, Landing.list(path))
+
+  /** Commit against `landed`, the dir's current `Landing.list`. */
+  private[sources] def land(messages: Array[WriterCommitMessage],
+                            landed: => Seq[Landing.Snapshot]): Unit = {
     val fs = new Path(path).getFileSystem(new Configuration())
     val parts = messages.collect {
       case GtfsRtCommitMessage(tmp, rows) if rows > 0 => tmp
@@ -144,35 +125,20 @@ private[sources] class GtfsRtBatchWrite(kind: String, path: String,
       // land must sort after EVERYTHING present, or a stream already
       // past that watermark would silently skip the new files
       val newNames =
-        if (parts.length <= 1) parts.map(_ => s"${kind}_$stamp.pb").toSeq
-        else parts.indices.map(i => f"${kind}_${stamp}_p$i%02d.pb")
-      val existing = {
-        val it = fs.listFiles(new Path(path), true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".pb"))
-            buf += st.getPath.getName
-        }
-        buf
-      }
-      if (newNames.nonEmpty && existing.nonEmpty && newNames.min <= existing.max)
+        if (parts.length <= 1) parts.map(_ => Landing.fileName(kind, stamp)).toSeq
+        else parts.indices.map(i => Landing.fileName(kind, stamp, Some(i)))
+      // keys lead with the basename, so the last key holds the max name
+      val newest = landed.lastOption.map(_.name)
+      if (newNames.nonEmpty && newest.exists(newNames.min <= _))
         throw new IllegalStateException(
           s"gtfsrt: stamp $stamp does not land after the current " +
-            s"watermark ${existing.max} — snapshots must arrive in " +
+            s"watermark ${newest.get} — snapshots must arrive in " +
             "ascending name order (monotonic-stamp contract)")
       parts.zip(newNames).foreach { case (tmp, name) =>
         if (!fs.rename(new Path(tmp), new Path(path, name)))
           throw new java.io.IOException(s"gtfsrt: rename $tmp -> $name failed")
       }
-    } finally {
-      // drop temps of empty partitions (and of a refused commit)
-      messages.collect { case GtfsRtCommitMessage(tmp, _) => tmp }
-        .foreach { tmp =>
-          val p = new Path(tmp)
-          if (fs.exists(p)) fs.delete(p, false)
-        }
-    }
+    } finally abort(messages) // drop temps of empty partitions (and of a refused commit)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -184,19 +150,15 @@ private[sources] class GtfsRtBatchWrite(kind: String, path: String,
   }
 }
 
-private[sources] class GtfsRtWriterFactory(kind: String, path: String,
-                                           schema: StructType, feedTs: Long)
-    extends DataWriterFactory {
+/** One factory for batch and streaming writes: an epoch changes nothing per task. */
+private[sources] case class GtfsRtWriterFactory(kind: String, path: String,
+                                                schema: StructType, feedTs: Long)
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GtfsRtDataWriter(kind, path, schema, feedTs)
-}
-
-private[sources] case class GtfsRtStreamingWriterFactory(
-    kind: String, path: String, schema: StructType, feedTs: Long)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GtfsRtDataWriter(kind, path, schema, feedTs)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
 }
 
 /** Buffers the partition's rows, encodes ONE FeedMessage on commit,
@@ -240,16 +202,21 @@ private[sources] class GtfsRtDataWriter(kind: String, path: String,
     }
     w.message(1)(h => h.string(1, "2.0").int(2, 0).int(3, ts))
     var n = 0
+    // one FeedEntity (field 2) per landed row, ids w1, w2, … in row order
+    def entity(body: Writer => Unit): Unit = {
+      n += 1
+      w.message(2) { e =>
+        e.string(1, s"w$n")
+        body(e)
+      }
+    }
     kind match {
       case GtfsRtSource.VehiclePositions =>
         val (tI, rI, vI, laI, loI, bI, sI, tsI) =
           (idx("trip_id"), idx("route_id"), idx("vehicle_id"), idx("latitude"),
             idx("longitude"), idx("bearing"), idx("stop_id"), idx("timestamp_epoch"))
         buf.foreach { v =>
-          n += 1
-          val id = n
-          w.message(2) { e =>
-            e.string(1, s"w$id")
+          entity { e =>
             e.message(4) { veh =>
               if (v(tI) != null || v(rI) != null) veh.message(1) { t =>
                 if (v(tI) != null) t.string(1, v(tI).asInstanceOf[String])
@@ -271,10 +238,7 @@ private[sources] class GtfsRtDataWriter(kind: String, path: String,
         val (tI, rI, dI) = (idx("trip_id"), idx("route_id"), idx("direction_id"))
         buf.foreach { v =>
           if (v(tI) != null) { // decoder requires the trip header
-            n += 1
-            val id = n
-            w.message(2) { e =>
-              e.string(1, s"w$id")
+            entity { e =>
               e.message(3)(_.message(1) { t =>
                 t.string(1, v(tI).asInstanceOf[String])
                 if (v(rI) != null) t.string(5, v(rI).asInstanceOf[String])
@@ -288,10 +252,7 @@ private[sources] class GtfsRtDataWriter(kind: String, path: String,
           idx("stop_id"), idx("arrival_time"), idx("departure_time"))
         buf.foreach { v =>
           if (v(tI) != null) {
-            n += 1
-            val id = n
-            w.message(2) { e =>
-              e.string(1, s"w$id")
+            entity { e =>
               e.message(3) { tu =>
                 tu.message(1)(_.string(1, v(tI).asInstanceOf[String]))
                 tu.message(2) { s =>

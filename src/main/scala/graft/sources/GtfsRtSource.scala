@@ -10,12 +10,13 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.gtfs.{RtDecode, RtFeedMessage}
+import graft.gtfs.{Landing, RtDecode, RtFeedMessage, Schemas}
 
 /** DataSourceV2 connector for GTFS-RT protobuf snapshot files —
   * `spark.read.format("gtfsrt").option("kind", …).load(dir)` — the
@@ -36,17 +37,20 @@ import graft.gtfs.{RtDecode, RtFeedMessage}
   *    filter (visible in the scan description);
   *  - SNAPSHOT-FILE PRUNING (opt-in, `option("fileStampPrune","true")`):
   *    a pushed `timestamp_epoch` range skips whole minute-stamped
-  *    snapshot files by their `yyyyMMdd_HHmm` name stamp — the custom-
-  *    source analog of partition pruning. Opt-in because it relies on
-  *    the WRITER contract (stamp ≈ feed header time, `StaticFetch`
-  *    F10 stamping): `fileStampSlackMinutes` (default 10) pads the
-  *    window, `fileStampZone` (default Europe/Paris, the reference's
-  *    stamp zone) interprets the stamp;
+  *    snapshot files by their name stamp — the custom-source analog of
+  *    partition pruning. Opt-in because it relies on the WRITER
+  *    contract (stamp ≈ feed header time, `StaticFetch` F10 stamping);
+  *    the window is padded by `Landing.StampSlackMinutes` and stamps
+  *    are read in `Landing.Zone`;
   *  - corrupt snapshots decode to zero rows via `parseFeedSafe`
   *    (ON_ERROR='CONTINUE' parity), never a task failure.
   *
-  * Wire decode itself is `graft.gtfs.ProtoWire` — cites
-  * gtfs_rt_minutely.py:40-163 for field semantics.
+  * Options: `kind` (vehicle_positions | trip_updates |
+  * stop_time_updates), `fileStampPrune` (batch), `maxFilesPerTrigger`
+  * (streaming). File naming, stamps and the recursive listing are the
+  * landing-dir contract owned by `graft.gtfs.Landing`; wire decode
+  * itself is `graft.gtfs.ProtoWire` — cites gtfs_rt_minutely.py:40-163
+  * for field semantics.
   */
 class GtfsRtSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "gtfsrt"
@@ -74,20 +78,13 @@ object GtfsRtSource {
           s"$TripUpdates or $StopTimeUpdates)")
     }
 
-  private[sources] def schemaFor(kind: String): StructType = kind match {
-    case VehiclePositions => StructType(Seq(
-      StructField("trip_id", StringType), StructField("route_id", StringType),
-      StructField("vehicle_id", StringType), StructField("latitude", DoubleType),
-      StructField("longitude", DoubleType), StructField("bearing", LongType),
-      StructField("stop_id", StringType), StructField("timestamp_epoch", LongType)))
-    case TripUpdates => StructType(Seq(
-      StructField("trip_id", StringType), StructField("route_id", StringType),
-      StructField("direction_id", LongType)))
-    case StopTimeUpdates => StructType(Seq(
-      StructField("trip_id", StringType), StructField("stop_sequence", LongType),
-      StructField("stop_id", StringType), StructField("arrival_time", LongType),
-      StructField("departure_time", LongType)))
-  }
+  /** A kind's rows are its bronze table's, minus the insert_date stamp. */
+  private[sources] def schemaFor(kind: String): StructType =
+    Schemas.csvSchema(Schemas.bronze(kind match {
+      case VehiclePositions => "vehicle_positions_raw"
+      case TripUpdates => "trip_updates_raw"
+      case StopTimeUpdates => "trip_stop_times"
+    }))
 
   /** Full-width catalyst values for one decoded feed, in schemaFor
     * field order. Strings become UTF8String; Options unwrap to null.
@@ -122,10 +119,9 @@ private[sources] class GtfsRtTable(kind: String, path: String, schema: StructTyp
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GtfsRtScanBuilder(kind, path, schema, options)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GtfsRtWriteBuilder(kind, path, info)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
+    override def build(): Write = new GtfsRtWrite(kind, path, info.schema(), info.options())
+  }
 }
 
 private[sources] class GtfsRtScanBuilder(kind: String, path: String,
@@ -174,16 +170,13 @@ private[sources] class GtfsRtScanBuilder(kind: String, path: String,
   override def build(): Scan = new GtfsRtScan(kind, path, full, required,
     pushed,
     options.getBoolean("fileStampPrune", false),
-    options.getLong("fileStampSlackMinutes", 10L),
-    options.getOrDefault("fileStampZone", "Europe/Paris"),
     options.getInt("maxFilesPerTrigger", 0))
 }
 
 private[sources] class GtfsRtScan(kind: String, path: String,
                                   full: StructType, required: StructType,
                                   pushed: Array[Filter],
-                                  stampPrune: Boolean, slackMinutes: Long,
-                                  stampZone: String,
+                                  stampPrune: Boolean,
                                   maxFilesPerTrigger: Int = 0)
     extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -191,100 +184,59 @@ private[sources] class GtfsRtScan(kind: String, path: String,
   override def description(): String =
     s"gtfsrt kind=$kind path=$path pruned=[${required.fieldNames.mkString(",")}]" +
       s" filters=[${pushed.mkString(",")}]" +
-      (if (stampPrune) s" fileStampPrune(slack=${slackMinutes}m)" else "")
+      (if (stampPrune) s" fileStampPrune(slack=${Landing.StampSlackMinutes}m)" else "")
 
-  /** The pushed timestamp_epoch range, widened by the slack — the
-    * file-level prune window. (lo, hi) in epoch seconds.
+  /** Whether a file stamped at epoch second `s` may hold rows in the
+    * pushed timestamp_epoch range, widened by the slack on each side
+    * — the file-level prune test. Stamps are real epochs, so `s ±
+    * slack` cannot overflow.
     */
-  private def stampWindow: Option[(Long, Long)] = {
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
+  private lazy val stampMayMatch: Long => Boolean = {
+    val slack = Landing.StampSlackMinutes * 60
     def num(v: Any): Option[Long] = v match {
       case l: Long => Some(l)
       case i: Int => Some(i.toLong)
       case _ => None
     }
-    pushed.foreach {
-      case GreaterThan("timestamp_epoch", v) => num(v).foreach(x => lo = math.max(lo, x + 1))
-      case GreaterThanOrEqual("timestamp_epoch", v) => num(v).foreach(x => lo = math.max(lo, x))
-      case LessThan("timestamp_epoch", v) => num(v).foreach(x => hi = math.min(hi, x - 1))
-      case LessThanOrEqual("timestamp_epoch", v) => num(v).foreach(x => hi = math.min(hi, x))
-      case EqualTo("timestamp_epoch", v) => num(v).foreach { x => lo = math.max(lo, x); hi = math.min(hi, x) }
-      case _ =>
+    val bounds: Array[Long => Boolean] = pushed.flatMap {
+      case GreaterThan("timestamp_epoch", v) => num(v).map(x => (s: Long) => s + slack > x)
+      case GreaterThanOrEqual("timestamp_epoch", v) => num(v).map(x => (s: Long) => s + slack >= x)
+      case LessThan("timestamp_epoch", v) => num(v).map(x => (s: Long) => s - slack < x)
+      case LessThanOrEqual("timestamp_epoch", v) => num(v).map(x => (s: Long) => s - slack <= x)
+      case EqualTo("timestamp_epoch", v) => num(v).map(x => (s: Long) => s + slack >= x && s - slack <= x)
+      case _ => None
     }
-    if (lo == Long.MinValue && hi == Long.MaxValue) None
-    else Some((lo, hi))
-  }
-
-  /** Epoch seconds of a `..._yyyyMMdd_HHmm.pb` name stamp in the
-    * writer's zone; None when the name carries no stamp (never
-    * pruned).
-    */
-  private def stampEpoch(name: String): Option[Long] = {
-    val m = GtfsRtScan.StampRe.findFirstMatchIn(name)
-    m.flatMap { g =>
-      try {
-        val dt = java.time.LocalDateTime.parse(g.group(1),
-          GtfsRtScan.StampFmt)
-        Some(dt.atZone(java.time.ZoneId.of(stampZone)).toEpochSecond)
-      } catch { case _: Exception => None }
-    }
+    s => bounds.forall(_(s))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".pb"))
-        files += st.getPath.toString
-    }
-    val window = if (stampPrune) stampWindow else None
-    val kept = window match {
-      case Some((lo, hi)) =>
-        val slack = slackMinutes * 60
-        // saturating bounds: a one-sided range keeps the open side open
-        val loB = if (lo <= Long.MinValue + slack) Long.MinValue else lo - slack
-        val hiB = if (hi >= Long.MaxValue - slack) Long.MaxValue else hi + slack
-        files.filter { f =>
-          stampEpoch(new Path(f).getName) match {
-            case Some(s) => s >= loB && s <= hiB
-            case None => true // unstamped file: never prune
-          }
-        }
-      case None => files
-    }
-    kept.sorted.map(f => GtfsRtPartition(f): InputPartition).toArray
+    val files = Landing.list(path)
+    val kept =
+      if (!stampPrune) files
+      else files.filter(f => Landing.stampEpoch(f.name).forall(stampMayMatch)) // unstamped: never pruned
+    kept.map(f => GtfsRtPartition(f.path.toString): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // indices of the pruned fields within the full row
-    val idx = required.fieldNames.map(full.fieldIndex)
-    new GtfsRtReaderFactory(kind, idx, full, pushed)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new GtfsRtReaderFactory(kind, full, required, pushed)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GtfsRtMicroBatchStream(kind, path, full, required, pushed,
-      maxFilesPerTrigger)
+    new GtfsRtMicroBatchStream(path, createReaderFactory(), maxFilesPerTrigger)
 }
 
-/** Streaming form of the snapshot scan: the offset is the
-  * lexicographically-largest processed file NAME. Minute-stamped
-  * snapshot names (`…_yyyyMMdd_HHmm.pb`, F10 stamping) sort
-  * chronologically, so each micro-batch is exactly the files that
-  * arrived since the checkpointed watermark — exactly-once across
-  * restarts with an O(1) offset (no seen-files log to compact).
+/** Streaming form of the snapshot scan: the offset is the largest
+  * processed `Landing.list` key, which leads with the file NAME.
+  * Minute-stamped snapshot names (F10 stamping) sort chronologically,
+  * so each micro-batch is exactly the files that arrived since the
+  * checkpointed watermark — exactly-once across restarts with an O(1)
+  * offset (no seen-files log to compact).
   * CONTRACT (documented, writer-enforced by `StaticFetch`): the
   * landing dir is append-only and stamps are monotonic; a file
   * back-dated behind the watermark is never picked up (the batch
   * scan remains the backfill path).
   */
-private[sources] class GtfsRtMicroBatchStream(kind: String, path: String,
-                                              full: StructType,
-                                              required: StructType,
-                                              pushed: Array[Filter],
+private[sources] class GtfsRtMicroBatchStream(path: String,
+                                              readerFactory: PartitionReaderFactory,
                                               maxFilesPerTrigger: Int = 0)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
@@ -316,38 +268,9 @@ private[sources] class GtfsRtMicroBatchStream(kind: String, path: String,
   override def reportLatestOffset(): Offset =
     GtfsRtOffset(listNames().lastOption.getOrElse(""))
 
-  /** Offset keys are `<basename>\t<root-relative-path>`: the
-    * recursive listing admits nested subdirectories, so a bare-name
-    * key would reconstruct a wrong path in planInputPartitions and
-    * collide identically-named files across subdirs, while a
-    * relative-PATH key would order `day10/…` before `day9/…` and
-    * silently drop every later-stamped file landing in a
-    * lexicographically-earlier subdir. Leading with the basename
-    * keeps the watermark ordered by the chronological name stamp
-    * regardless of subdirectory (the documented "monotonic stamps
-    * suffice" contract); the relative-path suffix keeps same-named
-    * files in different subdirs distinct and carries the real path to
-    * the reader. Tab can't appear in the stamp names and keeps the
-    * key single-line for the checkpoint log. Flat landing dirs —
-    * the reference layout — degenerate to `<name>\t<name>`, which
-    * sorts exactly like the pre-nested bare-name keys.
-    */
-  private def listNames(): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) return Seq.empty
-    val rootUri = fs.getFileStatus(p).getPath.toUri.getPath.stripSuffix("/")
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".pb")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(rootUri + "/")
-        files += s"${st.getPath.getName}\t$rel"
-      }
-    }
-    files.sorted.toSeq
-  }
+  /** Offsets are `Landing.list` keys; the dir may not exist yet. */
+  private def listing(): Seq[Landing.Snapshot] = Landing.list(path, missingOk = true)
+  private def listNames(): Seq[String] = listing().map(_.key)
 
   override def initialOffset(): Offset = GtfsRtOffset("")
   /** Checkpoints written before the key format grew its
@@ -370,16 +293,13 @@ private[sources] class GtfsRtMicroBatchStream(kind: String, path: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val lo = start.asInstanceOf[GtfsRtOffset].lastName
     val hi = end.asInstanceOf[GtfsRtOffset].lastName
-    listNames()
-      .filter(n => n > lo && n <= hi)
-      // key = "<basename>\t<relpath>"; the path part is after the tab
-      .map(n => GtfsRtPartition(s"$path/${n.substring(n.indexOf('\t') + 1)}"): InputPartition)
+    listing()
+      .filter(s => s.key > lo && s.key <= hi)
+      .map(s => GtfsRtPartition(s.path.toString): InputPartition)
       .toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GtfsRtReaderFactory(kind,
-      required.fieldNames.map(full.fieldIndex), full, pushed)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 /** O(1) streaming offset: the last processed snapshot file name. */
@@ -387,18 +307,14 @@ private[sources] case class GtfsRtOffset(lastName: String) extends Offset {
   override def json(): String = lastName
 }
 
-private[sources] object GtfsRtScan {
-  // optional _pNN suffix: multi-partition sink commits stay prunable
-  val StampRe = """(\d{8}_\d{4})(?:_p\d+)?\.pb$""".r
-  val StampFmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmm")
-}
-
 private[sources] case class GtfsRtPartition(file: String) extends InputPartition
 
-private[sources] class GtfsRtReaderFactory(kind: String, fieldIdx: Array[Int],
-                                           full: StructType,
+private[sources] class GtfsRtReaderFactory(kind: String, full: StructType,
+                                           required: StructType,
                                            pushed: Array[Filter])
     extends PartitionReaderFactory {
+  // indices of the pruned fields within the full row
+  private val fieldIdx = required.fieldNames.map(full.fieldIndex)
 
   /** Compile the pushed filters into one predicate over the
     * full-width decoded row. Strings compare as UTF8String (the

@@ -59,4 +59,13 @@ class ProtoWireSpec extends AnyFunSuite {
       assert(r.readVarint() === v, s"for $v")
     }
   }
+
+  test("a length prefix past the enclosing message's end is rejected, not read from the sibling") {
+    // entity (len 2) whose id declares 9 bytes: the 9 bytes after the
+    // entity's end belong to the next top-level field
+    val bytes = Array(0x12, 0x02, 0x0A, 0x09, 0x12, 0x07, 0x0A, 0x05,
+      0x68, 0x65, 0x6C, 0x6C, 0x6F).map(_.toByte)
+    intercept[IllegalArgumentException](GtfsRtProto.parseFeed(bytes))
+    assert(RtDecode.parseFeedSafe(bytes).isEmpty)
+  }
 }

@@ -141,7 +141,7 @@ class UtilSpec extends AnyFunSuite {
     val good = Fixtures.tripUpdatesSnapshot(1756884757L)
     val corrupt = good.take(good.length / 2) // truncated mid-message
     val garbage = Array.fill[Byte](64)(0x7f)
-    assert(RtDecode.parseFeedSafe(corrupt).isEmpty || RtDecode.parseFeedSafe(corrupt).nonEmpty) // never throws
+    assert(RtDecode.parseFeedSafe(corrupt).isEmpty) // cut mid-entity
     assert(RtDecode.parseFeedSafe(garbage).isEmpty)
     val blobs = Seq(good, corrupt, garbage).toDS()
     val (tu, stu) = RtDecode.decodeTripUpdateBlobs(blobs)
@@ -150,7 +150,23 @@ class UtilSpec extends AnyFunSuite {
     val wh = TestSpark.tempDir("corrupt_ingest")
     val corruptCount = BronzeIngest.ingestTripUpdateBlobs(blobs, wh,
       java.time.LocalDateTime.of(2025, 9, 3, 9, 30))
-    assert(corruptCount >= 1 && corruptCount <= 2) // garbage certain; truncation may half-parse
+    assert(corruptCount == 2) // the truncated and the garbage snapshot
+  }
+
+  test("every prefix of a snapshot either fails or decodes to an exact entity prefix") {
+    for ((kind, full) <- Seq("trip_updates" -> Fixtures.tripUpdatesSnapshot(),
+                             "vehicle_positions" -> Fixtures.vehiclePositionsSnapshot())) {
+      val whole = GtfsRtProto.parseFeed(full).entities
+      val parsed = (0 to full.length).flatMap { k =>
+        RtDecode.parseFeedSafe(full.take(k)).map { feed =>
+          assert(feed.entities == whole.take(feed.entities.length),
+            s"$kind cut at $k bytes decoded to a wrong value")
+          k
+        }
+      }
+      // the cuts at entity boundaries parse, the full snapshot among them
+      assert(parsed.contains(full.length) && parsed.size > 2, s"$kind: $parsed")
+    }
   }
 
   test("K2: protobuf text dump writes one line per entity") {

@@ -113,7 +113,31 @@ class GtfsRtSinkSpec extends AnyFunSuite {
       .option("kind", "vehicle_positions").load(dir)
     assert(back.count() == vpRows.length)
     // part-suffixed names still carry the stamp for file pruning
-    assert(names.forall(n => GtfsRtScan.StampRe.findFirstMatchIn(n).nonEmpty))
+    assert(names.forall(n => graft.gtfs.Landing.StampRe.findFirstMatchIn(n).nonEmpty))
+  }
+
+  test("epoch retry: re-committing a landed epoch lands nothing and drops its own temps") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = TestSpark.tempDir("sink_retry")
+    val kind = "vehicle_positions"
+    val schema = GtfsRtSource.schemaFor(kind)
+    // one task attempt: a single row written to an invisible temp file
+    def attempt() = {
+      val w = new GtfsRtDataWriter(kind, dir, schema, 0L)
+      w.write(InternalRow(UTF8String.fromString("T1"), null, UTF8String.fromString("v1"),
+        43.5d, 7.25d, 10L, null, 1000000L))
+      Array[org.apache.spark.sql.connector.write.WriterCommitMessage](w.commit())
+    }
+    def files() = new java.io.File(dir).list().toSeq.filterNot(_.endsWith(".crc")).sorted
+    val write = new GtfsRtStreamingWrite(kind, dir, schema, "20250910_0800", 0L)
+    write.commit(3L, attempt())
+    val landed = files()
+    assert(landed == Seq("vehicle_positions_20250910_0806.pb"), landed.mkString(","))
+    val retry = attempt()
+    assert(files().exists(_.endsWith(".tmp")), "the retried attempt wrote its temp")
+    write.commit(3L, retry)
+    assert(files() == landed, "a retried epoch lands nothing new and leaves no temp")
   }
 
   test("sink-written snapshots stream through the connector exactly once") {

@@ -223,8 +223,8 @@ class GtfsRtSourceSpec extends AnyFunSuite {
     Fixtures.writeRtSnapshots(TestSpark.tempDir("dsv2_legacy_tu"), vp,
       stamp = "20250903_1000", feedTs = 1000000L)
     val schema = GtfsRtSource.schemaFor("vehicle_positions")
-    val s = new GtfsRtMicroBatchStream("vehicle_positions", vp, schema, schema,
-      Array.empty[org.apache.spark.sql.sources.Filter])
+    val s = new GtfsRtMicroBatchStream(vp, new GtfsRtReaderFactory("vehicle_positions",
+      schema, schema, Array.empty[org.apache.spark.sql.sources.Filter]))
     // a checkpoint written before offset keys grew the \t<relpath>
     // suffix stores the bare basename; un-migrated, the same file's
     // new key "name\tname" compares greater and the file re-reads
